@@ -11,7 +11,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from pipelinejobs_indexer_spark import registry
-from pipelinejobs_indexer_spark.session import tune
+from pipelinejobs_indexer_spark.session import state, tune
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -61,13 +61,17 @@ def _isolated(fn: Callable[[SparkSession, str], DataFrame]):
     results (Spark recomputes evicted subtrees) but A's measured
     shape/runtime silently changes. If interleaving ever becomes a
     driver mode, scope this to unpersisting only the previous query's
-    own caches instead of the session-wide clear."""
+    own caches instead of the session-wide clear. The same contract
+    lets entry drop the memory-sink views of earlier streaming replays
+    (SessionState.reset), which otherwise hold their rows in driver
+    heap for the rest of the session."""
 
     import functools
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.catalog.clearCache()
+        state(spark).reset()
         return fn(spark, sf_dir)
 
     return run

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Runtime-settable (SQLConf) knobs — safe to apply to a foreign session.
 _RUNTIME_CONFS = {
@@ -61,38 +62,69 @@ def _heap_bytes(size: str) -> int:
         return 0
 
 
-# Sessions whose join-strategy preference has been decided (keyed by
-# applicationId): tune() runs on every load_table call, and re-setting
-# the conf each time would silently clobber an explicit mid-session
-# override (e.g. a test forcing SMJ on a large-heap session) — r14
-# ADVICE. One decision per session, same memoized-per-session pattern
-# as the schema/width caches.
-_smj_pref_appids: set[str] = set()
+# Keys whose absence changes answers, not just speed: tune() raises
+# rather than leave a session half-tuned.
+_REQUIRED_CONFS = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
 
-# Sessions already tuned: tune() runs on EVERY load_table / stream
-# construction, and each _RUNTIME_CONFS application is ~10 py4j round
-# trips of pure driver latency (guide §7.3) re-setting values that are
-# already set — session confs persist, and the operators that scope a
-# conf (CC loop, streaming replays) restore it themselves in `finally`.
-# One application per applicationId.
-_tuned_appids: set[str] = set()
+
+class SessionState:
+    """What the engine memoizes for one SparkSession: planning metadata
+    and plan handles, never data or results — every action still
+    recomputes from the parquet inputs.
+
+    tune() creates it on first sight of a session and stores it on the
+    session object, so it dies with its session, and a ``newSession()``
+    clone (shared SparkContext, own SQLConf and temp views) gets its own
+    tuning and plans. It is an attribute rather than a WeakKeyDictionary
+    entry because the memoized DataFrames point back at the session: a
+    weak key would never be collected.
+
+    * ``schemas``: parquet path -> footer schema. A bare
+      ``spark.read.parquet(path)`` runs a ~130 ms driver-side inference
+      job per call; with an explicit schema the reader builds in ~25 ms.
+      At 100 TB, schema inference over a large file listing is a classic
+      driver stall (guide §7.3); production reads should pass a catalog
+      schema exactly like this.
+    * ``scan_widths``: parquet path -> scan partition count
+      (``tables._scan_width``).
+    * ``plans``: fixture-builder DataFrame handles (``tables._plan_memoized``).
+    * ``sink_views``: memory-sink views made by ``streaming.core.run_to_batch``;
+      each holds its replay's rows in driver heap until :meth:`reset`.
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+        self.schemas: dict[str, StructType] = {}
+        self.scan_widths: dict[str, int] = {}
+        self.plans: dict[tuple, DataFrame] = {}
+        self.sink_views: list[str] = []
+        self.checkpoint_dir_set = False
+        self.scratch_prefix: str | None = None
+
+    def schema(self, path: str) -> StructType:
+        schema = self.schemas.get(path)
+        if schema is None:
+            schema = self.schemas[path] = self.spark.read.parquet(path).schema
+        return schema
+
+    def reset(self) -> None:
+        """Drop the sink views of earlier replays. Run at each query's
+        entry (``__spark_entry__._isolated``), whose sequential-driver
+        contract means the previous query's frame is already collected."""
+        for name in self.sink_views:
+            self.spark.catalog.dropTempView(name)
+        self.sink_views.clear()
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to any session (ours or the driver's)."""
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        app = None
-    if app is not None and app in _tuned_appids:
+    """Apply runtime confs to any session (ours or the driver's) once, by
+    creating its SessionState. Later calls return at once: each conf
+    application is ~10 py4j round trips of pure driver latency (guide
+    §7.3), and re-setting would clobber an explicit mid-session override
+    (e.g. a test forcing SMJ on a large-heap session). The operators that
+    scope a conf (CC loop, streaming replays) restore it themselves."""
+    if getattr(spark, "_graft_state", None) is not None:
         return spark
-    for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going
-    if app is not None:
-        _tuned_appids.add(app)
     # Prefer shuffled-hash over sort-merge when the planner's size
     # conditions hold (guide §3.1/§9) — skips the per-side sorts; r14
     # interleaved A/B at sf0.1: join_files_job_provenance 1.33 -> 1.11 s,
@@ -105,26 +137,41 @@ def tune(spark: SparkSession) -> SparkSession:
     # spills and always completes, so small-heap sessions keep Spark's
     # default. In local mode the executor heap IS the driver heap; on a
     # real cluster set spark.executor.memory >= 4g (any production
-    # profile) and the preference engages. Decided ONCE per
-    # applicationId so later explicit settings stick (r14 ADVICE).
-    try:
-        app = spark.sparkContext.applicationId
-        if app not in _smj_pref_appids:
-            master = spark.conf.get("spark.master", "local")
-            key = (
-                "spark.driver.memory"  # local mode: the driver heap IS the executor
-                if master.startswith("local")
-                else "spark.executor.memory"  # cluster: builds happen on executors
-            )
-            heap = _heap_bytes(spark.conf.get(key, "1g"))
-            spark.conf.set(
-                "spark.sql.join.preferSortMergeJoin",
-                "false" if heap >= (4 << 30) else "true",
-            )
-            _smj_pref_appids.add(app)
-    except Exception:
-        pass
+    # profile) and the preference engages.
+    master = spark.conf.get("spark.master", "local")
+    heap = _heap_bytes(
+        spark.conf.get(
+            "spark.driver.memory"  # local mode: the driver heap IS the executor
+            if master.startswith("local")
+            else "spark.executor.memory",  # cluster: builds happen on executors
+            "1g",
+        )
+    )
+    smj = "false" if heap >= (4 << 30) else "true"
+    for k, v in {**_RUNTIME_CONFS, "spark.sql.join.preferSortMergeJoin": smj}.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as exc:
+            if k in _REQUIRED_CONFS:
+                raise RuntimeError(f"tune(): cannot set {k}={v} on this session") from exc
+            # otherwise non-settable on this build — keep going
+    # Python workers import this package by name. In local mode they
+    # start in the driver's working directory, so a driver started
+    # outside the repo root failed every UDF with ModuleNotFoundError.
+    # UDFs carry the SparkContext's environment to their workers; a
+    # cluster submit ships the package with --py-files instead.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "")
+    if root not in paths.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, [root, paths]))
+    spark._graft_state = SessionState(spark)
     return spark
+
+
+def state(spark: SparkSession) -> SessionState:
+    """The session's SessionState, tuning the session on first sight."""
+    return tune(spark)._graft_state
 
 
 def default_parallelism() -> int:
@@ -163,9 +210,6 @@ def get_spark(app_name: str = "pipelinejobs-indexer-spark") -> SparkSession:
 
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-_checkpoint_dir_appids: set[str] = set()
 
 
 def iter_checkpoint(df, lazy: bool = False):
@@ -221,8 +265,8 @@ def iter_checkpoint(df, lazy: bool = False):
     from pyspark import StorageLevel
 
     spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    if app not in _checkpoint_dir_appids:
+    st = state(spark)
+    if not st.checkpoint_dir_set:
         import logging
 
         log = logging.getLogger(__name__)
@@ -242,10 +286,10 @@ def iter_checkpoint(df, lazy: bool = False):
                 ckdir,
             )
         else:
-            log.info("checkpoint dir for app %s: %s (pinned for app lifetime; "
-                     "later env changes are ignored)", app, ckdir)
+            log.info("checkpoint dir: %s (pinned for the session's lifetime; "
+                     "later env changes are ignored)", ckdir)
         spark.sparkContext.setCheckpointDir(ckdir)
-        _checkpoint_dir_appids.add(app)
+        st.checkpoint_dir_set = True
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return df.checkpoint()
@@ -253,31 +297,29 @@ def iter_checkpoint(df, lazy: bool = False):
         df.unpersist()
 
 
-_scratch_cleanup_appids: set[str] = set()
-
-
 def scratch_path(spark: SparkSession, name: str) -> str:
     """Session-scoped scratch location for sink/index/export artifacts:
-    keyed by applicationId so concurrent sessions on one host never
+    named by applicationId so concurrent applications on one host never
     collide (and re-runs within a session reuse/overwrite their own
-    copy), and registered for removal at interpreter exit so repeated
-    bench/sweep sessions do not accumulate unbounded data under the
-    temp dir. One cleanup hook per applicationId: a stop/restart cycle
-    within one interpreter gets a fresh appId, which needs its own hook
-    or its scratch dirs would outlive the process."""
-    import atexit
-    import glob
-    import shutil
+    copy), and registered for removal at interpreter exit, once per
+    session, so repeated bench/sweep sessions do not accumulate
+    unbounded data under the temp dir."""
     import tempfile
 
-    app = spark.sparkContext.applicationId
-    if app not in _scratch_cleanup_appids:
-        prefix = os.path.join(tempfile.gettempdir(), f"spark_graft_{app}_")
+    st = state(spark)
+    if st.scratch_prefix is None:
+        import atexit
+        import glob
+        import shutil
+
+        prefix = os.path.join(
+            tempfile.gettempdir(), f"spark_graft_{spark.sparkContext.applicationId}_"
+        )
 
         def _cleanup(prefix: str = prefix) -> None:
             for p in glob.glob(prefix + "*"):
                 shutil.rmtree(p, ignore_errors=True)
 
         atexit.register(_cleanup)
-        _scratch_cleanup_appids.add(app)
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_{app}_{name}")
+        st.scratch_prefix = prefix
+    return st.scratch_prefix + name

@@ -20,40 +20,19 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from ..session import tune
-
-def _batch_schema(spark: SparkSession, path: str) -> StructType:
-    """Probe a parquet file's batch-reader schema, memoized per
-    (applicationId, path) in tables._SCHEMA_CACHE: schema inference runs
-    a ~130 ms driver-side footer job per call, and every streaming-query
-    construction was re-paying it (r14 measurement). Shares the batch
-    loaders' cache so either side's first probe serves both."""
-    from ..tables import _SCHEMA_CACHE
-
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    return schema
-
-
-def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Streaming file sources need an explicit schema; probe it from the
-    batch reader so both testdata generations work (TIMESTAMP(NANOS) read
-    as long under nanosAsLong vs native TIMESTAMP(MICROS))."""
-    return _batch_schema(spark, f"{sf_dir}/events.parquet")
+from ..session import state
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a micro-batch stream with a proper event-time
     column (TimestampType — watermarks reject NTZ)."""
-    tune(spark)
+    # Streaming file sources need an explicit schema; probe it from the
+    # batch reader so both testdata generations work (TIMESTAMP(NANOS)
+    # read as long under nanosAsLong vs native TIMESTAMP(MICROS)).
     raw = (
         spark.readStream.format("parquet")
-        .schema(_events_schema(spark, sf_dir))
+        .schema(state(spark).schema(f"{sf_dir}/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
@@ -67,11 +46,9 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a Kafka/file-drop ingest feed of corpus documents (T11). No
     event-time column: the bloom-gate consumer is stateless, so no
     watermark is involved."""
-    tune(spark)
-    schema = _batch_schema(spark, f"{sf_dir}/documents.parquet")
     return (
         spark.readStream.format("parquet")
-        .schema(schema)
+        .schema(state(spark).schema(f"{sf_dir}/documents.parquet"))
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
     )
@@ -159,7 +136,8 @@ def run_to_batch(
     table: str = "events",
 ) -> DataFrame:
     """Drive a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the materialized batch table. When ``sf_dir``
+    memory sink and return the materialized batch table, whose sink view
+    lives until the session's next query entry (SessionState.reset). When ``sf_dir``
     is given, shuffle partitions (== state-store count, fixed at the
     query's first checkpoint) are scoped to replay_partitions() for the
     run and restored afterwards; ``table`` names the replayed source so
@@ -175,6 +153,7 @@ def run_to_batch(
 
     spark = stream_df.sparkSession
     name = f"stream_out_{_uuid.uuid4().hex}"
+    state(spark).sink_views.append(name)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     # RAM-backed checkpoint for SMALL replays (r14): the replay harness's
     # checkpoint (offset/commit logs + state snapshots) is ephemeral by

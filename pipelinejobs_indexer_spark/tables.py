@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import tune
+from .session import default_parallelism, state
 
 BASE_TABLES = (
     "region",
@@ -48,33 +48,10 @@ PET_ADJ = ["fond", "quick", "brave", "calm", "eager", "gentle", "happy", "jolly"
 PET_NOUN = ["bug", "fox", "owl", "crab", "newt", "lark", "moth"]
 
 
-# Planning-metadata caches, keyed by (applicationId, path) so a fresh
-# session re-probes and distinct sf_dirs never collide. These memoize
-# METADATA the session could cache itself (parquet footer schema, scan
-# split width) — never data or results; every action still recomputes
-# from the parquet inputs. Motivation (r14 measurement): a bare
-# ``spark.read.parquet(path)`` runs a driver-side schema-inference job
-# per call (~130 ms); with an explicit schema the reader builds in
-# ~25 ms. A bench sweep constructs each query fresh per run at ~2
-# ``load_table`` calls per query, so per-query-run construction was
-# paying 0.1-0.3 s of repeated footer reads — and at 100 TB, schema
-# inference over a large file listing is a classic driver stall
-# (optimization guide §7.3); production reads there should pass an
-# explicit/catalog schema exactly like this.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one base table; normalizes the events nano-timestamp."""
-    tune(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(state(spark).schema(path)).parquet(path)
     if name == "events":
         # Normalize ts to TIMESTAMP_NTZ micros (== DuckDB's ts::TIMESTAMP)
         # across testdata generations: TIMESTAMP(NANOS) parquet arrives as
@@ -90,15 +67,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type != "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     # Scan-identity marker (set AFTER any events normalization so the
-    # returned frame carries it): lets spread() consult the width cache
-    # instead of re-running the ~50 ms plan->RDD probe per construction.
-    # Brittleness note (VERDICT r14 item 4): a private attribute on a
-    # DataFrame works on classic PySpark but would be silently dropped
-    # by a Spark Connect DataFrame (different proxy object) — the
-    # failure mode is a harmless re-probe per construction, never a
-    # wrong result, because spread() treats a missing marker as
-    # "probe as before".
-    df._graft_scan_key = key
+    # returned frame carries it): lets spread() consult the session's
+    # scan-width memo instead of re-running the ~50 ms plan->RDD probe
+    # per construction. A Spark Connect DataFrame (a different proxy
+    # object) would drop this private attribute (VERDICT r14 item 4);
+    # the failure mode is a harmless re-probe, never a wrong result.
+    df._graft_scan_path = path
     return df
 
 
@@ -118,73 +92,65 @@ def spread(df: DataFrame) -> DataFrame:
     a 100 TB table already scans as thousands of row-group splits. Only
     worth it when per-row compute dominates — joins/aggs that shuffle
     anyway gain nothing and pay the extra exchange.
-
-    The width probe (``df.rdd.getNumPartitions()`` — forces plan->RDD
-    conversion, ~50 ms of driver time) is cached per (applicationId,
-    path) when the frame carries load_table's scan-identity marker:
-    scan width is fixed for a given path within a session, and every
-    query construction was re-paying the probe (r14 measurement).
-    Frames without the marker (derived/test frames) probe as before.
     """
-    from .session import default_parallelism
-
     n = default_parallelism()
-    key = getattr(df, "_graft_scan_key", None)
-    width = _SCAN_WIDTH_CACHE.get(key) if key is not None else None
-    if width is None:
-        width = df.rdd.getNumPartitions()
-        if key is not None:
-            _SCAN_WIDTH_CACHE[key] = width
-    if width < n:
+    if _scan_width(df) < n:
         df = df.repartition(n)
     return df
 
 
-# Scan-width memo. Two key shapes share it (no collision): spread()'s
-# (applicationId, path) from load_table's marker, and _spread_keyed's
-# (applicationId, sf_dir, table).
-_SCAN_WIDTH_CACHE: dict[tuple, int] = {}
-
-
-# Fixture-builder LOGICAL-PLAN memo, keyed (applicationId, sf_dir,
-# builder, variant): a fixture view's unresolved plan is identical for
-# every construction within a session, yet each build re-runs ~100
-# Column-algebra py4j round trips (r15 cProfile: jobs ~0.15 s,
-# archive_files ~0.12 s, messages ~0.10 s of pure driver time per call
-# — guide §7.3). Memoizing the DataFrame HANDLE is the plan-level
-# analog of the schema cache above — the semantic equivalent of
-# registering the fixture views once per session (CREATE TEMP VIEW) and
-# referencing them by name: a DataFrame is an immutable plan
-# description, not data — every action on a derived frame still
-# executes the full scan + projection from the parquet inputs; nothing
-# about results or partitioning is retained. Dies with the session
-# (applicationId key).
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
+def _scan_width(df: DataFrame) -> int:
+    """Partition count of a frame's scan. The probe
+    (``df.rdd.getNumPartitions()``) forces plan->RDD conversion, ~50 ms
+    of driver time, so for load_table's frames it is memoized per
+    session and path: scan width is fixed for a given path within a
+    session, and every query construction was re-paying the probe (r14
+    measurement). Frames without the marker (derived/test frames) probe
+    every time."""
+    path = getattr(df, "_graft_scan_path", None)
+    if path is None:
+        return df.rdd.getNumPartitions()
+    widths = state(df.sparkSession).scan_widths
+    if path not in widths:
+        widths[path] = df.rdd.getNumPartitions()
+    return widths[path]
 
 
 def _plan_memoized(build):
-    """Memoize a fixture builder's DataFrame per (applicationId, sf_dir,
-    name, extra args)."""
+    """Memoize a fixture builder's DataFrame HANDLE per session, sf_dir
+    and bound arguments (defaults applied, so ``f(s, d, False)``,
+    ``f(s, d, spread=False)`` share one entry).
+
+    A fixture view's unresolved plan is identical for every construction
+    within a session, yet each build re-runs ~100 Column-algebra py4j
+    round trips (r15 cProfile: jobs ~0.15 s, archive_files ~0.12 s,
+    messages ~0.10 s of pure driver time per call — guide §7.3). The
+    memo is the semantic equivalent of registering the fixture views
+    once per session (CREATE TEMP VIEW) and referencing them by name: a
+    DataFrame is an immutable plan description, not data — every action
+    on a derived frame still executes the full scan + projection from
+    the parquet inputs; nothing about results or partitioning is
+    retained."""
     import functools
+    import inspect
+
+    sig = inspect.signature(build)
 
     @functools.wraps(build)
-    def wrapper(spark: SparkSession, sf_dir: str, **kw):
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            build.__name__,
-            tuple(sorted(kw.items())),
-        )
-        df = _PLAN_CACHE.get(key)
+    def wrapper(spark: SparkSession, sf_dir: str, *args, **kw):
+        bound = sig.bind(spark, sf_dir, *args, **kw)
+        bound.apply_defaults()
+        key = (build.__name__, *list(bound.arguments.values())[1:])
+        plans = state(spark).plans
+        df = plans.get(key)
         if df is None:
-            df = build(spark, sf_dir, **kw)
-            _PLAN_CACHE[key] = df
+            df = plans[key] = build(spark, sf_dir, *args, **kw)
         return df
 
     return wrapper
 
 
-def _spread_keyed(df: DataFrame, key: str, cache_key: tuple[str, str]) -> DataFrame:
+def _spread_keyed(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition an underpartitioned base scan on its entity key
     BEFORE the uuid derivations run.
 
@@ -197,9 +163,8 @@ def _spread_keyed(df: DataFrame, key: str, cache_key: tuple[str, str]) -> DataFr
     narrow-row exchange). Keyed (not round-robin) so the exchange skips the
     sort-before-repartition pass and rows of one entity co-locate. Guarded
     to a no-op at real scale, where the scan already splits into thousands
-    of row-group tasks wider than a single executor; the probe
-    (``df.rdd.getNumPartitions()`` forces plan conversion, ~0.17s) is
-    cached per (sf_dir, table) since scan width is fixed for a given path.
+    of row-group tasks wider than a single executor; the width probe is
+    :func:`_scan_width`.
     Applied to the orders/lineitem builders only: their projections run 3
     sha2 per row, so parallelizing beats the exchange; the events-derived
     views (1 sha2/row) measured net-negative with it and load directly.
@@ -209,15 +174,8 @@ def _spread_keyed(df: DataFrame, key: str, cache_key: tuple[str, str]) -> DataFr
     already bound to narrow columns (P2) so nothing heavy lands back in the
     serial scan stage.
     """
-    from .session import default_parallelism
-
     n = default_parallelism()
-    cache_key = (df.sparkSession.sparkContext.applicationId, *cache_key)
-    width = _SCAN_WIDTH_CACHE.get(cache_key)
-    if width is None:
-        width = df.rdd.getNumPartitions()
-        _SCAN_WIDTH_CACHE[cache_key] = width
-    if width < n:
+    if _scan_width(df) < n:
         df = df.repartition(n, F.col(key))
     return df
 
@@ -235,7 +193,7 @@ def _typed_uuid(prefix: str, col):
 @_plan_memoized
 def jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PipelineJob documents derived from orders (FIXTURES.md B1)."""
-    o = _spread_keyed(load_table(spark, sf_dir, "orders"), "o_orderkey", (sf_dir, "orders"))
+    o = _spread_keyed(load_table(spark, sf_dir, "orders"), "o_orderkey")
     pipeline_uuid = F.concat(F.lit("106"), F.sha2(F.col("o_orderpriority"), 256))
     uuid = _typed_uuid("107", F.col("o_orderkey"))
     state = (
@@ -304,11 +262,7 @@ def archive_files(spark: SparkSession, sf_dir: str, spread: bool = True) -> Data
     -> 0.35 s at sf0.1 for agg_storage_stats. Default stays True: uuid/
     path-producing consumers still amortize 3 sha2/row across cores."""
     loaded = load_table(spark, sf_dir, "lineitem")
-    li = (
-        _spread_keyed(loaded, "l_orderkey", (sf_dir, "lineitem"))
-        if spread
-        else loaded
-    )
+    li = _spread_keyed(loaded, "l_orderkey") if spread else loaded
     job_uuid = _typed_uuid("107", F.col("l_orderkey"))
     ext = (
         F.when(F.col("l_partkey") % 4 == 0, "bam")

@@ -151,8 +151,9 @@ def test_training_shards_layout_and_order(spark):
 def test_scratch_path_cleans_up_at_exit(tmp_path):
     """scratch_path must remove every session-prefixed artifact at
     interpreter exit — repeated bench/sweep sessions must not accumulate
-    temp-dir data. Run in a subprocess (no JVM: only applicationId is
-    consulted) and check the dir is gone afterwards."""
+    temp-dir data. Run in a subprocess (no JVM: only applicationId and
+    the session's tuning are consulted) and check the dir is gone
+    afterwards."""
     import subprocess
     import sys as _sys
     import textwrap
@@ -163,7 +164,8 @@ def test_scratch_path_cleans_up_at_exit(tmp_path):
         tempfile.gettempdir = lambda: {str(tmp_path)!r}
         from pipelinejobs_indexer_spark.session import scratch_path
         fake = types.SimpleNamespace(
-            sparkContext=types.SimpleNamespace(applicationId="scrubtest")
+            conf=types.SimpleNamespace(set=lambda k, v: None, get=lambda k, d=None: d),
+            sparkContext=types.SimpleNamespace(applicationId="scrubtest", environment={{}}),
         )
         p = scratch_path(fake, "artifact")
         os.makedirs(p)

@@ -697,8 +697,14 @@ def test_provenance_join_is_int_keyed_no_explode(spark, sf_dir):
     assert "Generate" not in plan, plan
     assert re.search(r"Join cond.*job_key|\[job_key", plan) or "job_key" in plan, plan
     # exactly the two output uuid sha2s remain (file_uuid + job uuid);
-    # the per-row '117' proc hash is gone from both sides
-    assert "117" not in plan, plan
+    # the per-row '117' proc hash is gone from both sides. Matched as the
+    # hash expression, not a bare "117", which expression ids such as
+    # job_key#1175L also contain; the control shows the pattern finds
+    # the hash wherever it is computed.
+    proc_hash = re.compile(r"concat\(117, sha2\(")
+    control = archive_files(spark, sf_dir).select("generated_by")
+    assert proc_hash.search(_formatted_plan(control))
+    assert not proc_hash.search(plan), plan
 
 
 def test_fixture_builders_are_plan_memoized(spark, sf_dir):
@@ -712,3 +718,8 @@ def test_fixture_builders_are_plan_memoized(spark, sf_dir):
     assert archive_files(spark, sf_dir) is not archive_files(
         spark, sf_dir, spread=False
     )
+    # positional and keyword forms, and defaults, share one entry
+    assert archive_files(spark, sf_dir, False) is archive_files(
+        spark, sf_dir, spread=False
+    )
+    assert archive_files(spark, sf_dir) is archive_files(spark, sf_dir, spread=True)
